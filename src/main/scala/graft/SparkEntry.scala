@@ -22,7 +22,7 @@ object SparkEntry {
 
   /** Memoized events-derived transcript fixture (VERDICT r4 item 2): five
     * queries derive the SAME frame from the events table (window-function
-    * scan + per-user sort). Within one Bench/Verify JVM it is computed
+    * scan + per-user sort). Within one Verify/perfbench JVM it is computed
     * once per sf dir, written to scratch parquet (tmpfs when available)
     * and re-read lazily by each query — only the per-query projections
     * (dup planting, skew twin) are recomputed. Swept with the other e2e
@@ -33,11 +33,7 @@ object SparkEntry {
 
   private def e2eFixture(s: SparkSession, dir: String): DataFrame = {
     val path = e2eFixtureDirs.computeIfAbsent(dir, _ => {
-      val base = java.nio.file.Paths.get("/dev/shm")
-      val root = (if (java.nio.file.Files.isDirectory(base))
-        java.nio.file.Files.createTempDirectory(base, "graft-e2e-fixture")
-      else java.nio.file.Files.createTempDirectory("graft-e2e-fixture")).toString
-      e2eScratch.add(root)
+      val root = scratchDir("graft-e2e-fixture")
       e2eTurnsFromEvents(t(s, dir, "events")).write.parquet(s"$root/fixture")
       s"$root/fixture"
     })
@@ -47,7 +43,7 @@ object SparkEntry {
   /** Near-dup cluster table memoized per (JVM, sf dir) — the LSH →
     * verify → connected-components pass is the most expensive batch
     * stage and BOTH `dedup_clusters` and `corpus_retain` consume its
-    * exact output, so within one Bench/Verify JVM the first consumer
+    * exact output, so within one Verify/perfbench JVM the first consumer
     * materializes it to scratch parquet and the second reads it back
     * (deterministic, so read-back ≡ recompute). Mirrors `e2eFixture`.
     */
@@ -56,11 +52,7 @@ object SparkEntry {
 
   private def dupClusters(s: SparkSession, dir: String): DataFrame = {
     val path = dupClusterDirs.computeIfAbsent(dir, _ => {
-      val base = java.nio.file.Paths.get("/dev/shm")
-      val root = (if (java.nio.file.Files.isDirectory(base))
-        java.nio.file.Files.createTempDirectory(base, "graft-dup-clusters")
-      else java.nio.file.Files.createTempDirectory("graft-dup-clusters")).toString
-      e2eScratch.add(root)
+      val root = scratchDir("graft-dup-clusters")
       graft.ops.TrainingDataOps.nearDupClusters(
         t(s, dir, "documents").select(col("doc_id"), col("text")), "doc_id")
         .write.parquet(s"$root/clusters")
@@ -85,11 +77,7 @@ object SparkEntry {
 
   private def e2eGuardianSink(s: SparkSession, dir: String): String =
     e2eSinkDirs.computeIfAbsent(dir, _ => {
-      val base = java.nio.file.Paths.get("/dev/shm")
-      val root = (if (java.nio.file.Files.isDirectory(base))
-        java.nio.file.Files.createTempDirectory(base, "graft-e2e")
-      else java.nio.file.Files.createTempDirectory("graft-e2e")).toString
-      e2eScratch.add(root)
+      val root = scratchDir("graft-e2e")
       val turns = e2eFixture(s, dir)
       val withDups = turns.union(turns.filter(pmod(col("event_id"), lit(10L)) === 0))
         .drop("event_id")
@@ -118,9 +106,21 @@ object SparkEntry {
   private lazy val e2eScratch: java.util.concurrent.ConcurrentLinkedQueue[String] = {
     val q = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     sys.addShutdownHook {
-      q.forEach(d => Bench.deleteRecursively(new java.io.File(d)))
+      q.forEach(d => graft.stream.IceLite.rmTree(new java.io.File(d)))
     }
     q
+  }
+
+  /** A fresh scratch dir on tmpfs (`/dev/shm`) when the host has one,
+    * else under the default temp dir; swept with the e2e scratch at exit.
+    */
+  private def scratchDir(prefix: String): String = {
+    val base = java.nio.file.Paths.get("/dev/shm")
+    val root = (if (java.nio.file.Files.isDirectory(base))
+      java.nio.file.Files.createTempDirectory(base, prefix)
+    else java.nio.file.Files.createTempDirectory(prefix)).toString
+    e2eScratch.add(root)
+    root
   }
 
   /** Flagship: the full guardian pipeline over a synthesized transcript
@@ -407,11 +407,7 @@ object SparkEntry {
     // as the batch form: the standing query must converge to exactly the
     // batch join.
     "stream_provenance_e2e" -> ((s, dir) => {
-      val base = java.nio.file.Paths.get("/dev/shm")
-      val root = (if (java.nio.file.Files.isDirectory(base))
-        java.nio.file.Files.createTempDirectory(base, "graft-prov-e2e")
-      else java.nio.file.Files.createTempDirectory("graft-prov-e2e")).toString
-      e2eScratch.add(root)
+      val root = scratchDir("graft-prov-e2e")
       // BOTH side writes (raw + skewed twin) re-read the memoized fixture
       // parquet — two cheap scans, no recompute of the window-function sort
       val fixture = e2eFixture(s, dir)
@@ -450,11 +446,7 @@ object SparkEntry {
     // output row is traceable" promise exercised as an actual lookup
     // under the driver's hash gate. The oracle restates fixture + filter.
     "audit_conv_trace" -> ((s, dir) => {
-      val base = java.nio.file.Paths.get("/dev/shm")
-      val root = (if (java.nio.file.Files.isDirectory(base))
-        java.nio.file.Files.createTempDirectory(base, "graft-audit-trace")
-      else java.nio.file.Files.createTempDirectory("graft-audit-trace")).toString
-      e2eScratch.add(root)
+      val root = scratchDir("graft-audit-trace")
       // persisted across the two epoch commits (each commit evaluates its
       // slice twice for stats + data); released before the lookup — the
       // returned frame reads the committed parquet, not this plan

@@ -69,7 +69,12 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // the e2e query ran a streaming pipeline in this session — stop state
     // maintenance before the session to avoid shutdown error spam
-    Bench.quiesceStreamingState()
+    try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    catch { case _: Throwable => () }
+    try org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.streaming.state",
+      org.apache.logging.log4j.Level.OFF)
+    catch { case _: Throwable => () }
     spark.stop()
   }
 }

@@ -2,7 +2,8 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{
+  Expression, ImplicitCastInputTypes, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.graftbridge.CatalystBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -89,19 +90,21 @@ private[graft] object MinKHeap {
   * domain) ships at most k longs per map task into the shuffle instead
   * of sorting all its rows in a single window partition. NULL inputs
   * are skipped (they define no rank; the fixture ids are non-null).
-  * Ties: duplicates are kept as separate entries, exactly like the
-  * first k rows of the sort they replace.
+  * Narrower integral inputs (int, short, byte) are cast to long by the
+  * analyzer. Ties: duplicates are kept as separate entries, exactly like
+  * the first k rows of the sort they replace.
   */
 case class MinKLongsAgg(
     child: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MinKBuf] {
+  extends TypedImperativeAggregate[MinKBuf] with ImplicitCastInputTypes {
 
   require(k > 0, "k must be positive")
 
   override def children: Seq[Expression] = Seq(child)
+  override def inputTypes = Seq(LongType)
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 

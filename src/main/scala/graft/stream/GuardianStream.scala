@@ -881,11 +881,6 @@ object GuardianStream {
     */
   def expireFolded(sinkDir: String): Int = {
     var removed = 0
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-      f.delete(); ()
-    }
     def sweep(root: String, alsoData: Boolean): Unit = {
       val (latest, _) = qualitySources(root)
       latest.foreach { upTo =>
@@ -907,12 +902,12 @@ object GuardianStream {
             if (alsoData) {
               if (n.startsWith("manifest-")) {
                 val b = n.stripPrefix("manifest-").stripSuffix(".json").toLong
-                rmTree(
+                IceLite.rmTree(
                   java.nio.file.Paths.get(root, "data", s"batch=$b").toFile)
               } else {
                 // resolve via the marker's path BEFORE deleting the marker
                 val u = n.stripPrefix("compact-").stripSuffix(".json").toLong
-                rmTree(new java.io.File(compactSessionsDataDir(root, u)))
+                IceLite.rmTree(new java.io.File(compactSessionsDataDir(root, u)))
               }
             }
             if (java.nio.file.Files.deleteIfExists(p)) removed += 1
@@ -930,7 +925,7 @@ object GuardianStream {
             val num = d.takeWhile(_.isDigit)
             if (d != live && num.nonEmpty && num.toLong <= upTo &&
                 IceLite.orphanStale(cdir.resolve(d))) {
-              rmTree(cdir.resolve(d).toFile)
+              IceLite.rmTree(cdir.resolve(d).toFile)
               removed += 1
             }
           }
@@ -1045,25 +1040,13 @@ object GuardianStream {
     val cmsMetric = for { _ <- cfg.qualityWindow; cw <- cfg.cmsW } yield
       graft.expressions.CmsTextAgg.textColumn(col("text"), cw).as("gcms")
     val metrics = baseMetrics ++ qualityMetric ++ vocabMetric ++ divMetric ++ cmsMetric
-    // Commit-path phase timing (bench diagnosis only; off unless
-    // GRAFT_COMMIT_TIMING=1 in the environment).
-    val timing = sys.env.get("GRAFT_COMMIT_TIMING").contains("1")
-    def phase[A](name: String)(f: => A): A =
-      if (!timing) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"  [commit-timing] b$batchId $name ${(System.nanoTime() - t0) / 1e6}%.0f ms")
-        r
-      }
     val stamped = batch
       .withColumn("pid", spark_partition_id())
       .observe(obs, metrics.head, metrics.tail: _*)
-    val dataDir = phase("writeData") { IceLite.writeData(stamped, cfg.sinkDir, batchId) }
+    val dataDir = IceLite.writeData(stamped, cfg.sinkDir, batchId)
 
-    val m = phase("obs.get") { obs.get }
-    val parts = phase("footerStats") { IceLite.footerStats(dataDir) }
+    val m = obs.get
+    val parts = IceLite.footerStats(dataDir)
     val report = reportFromObserved(m)
     val nPii = if (m("npii") == null) 0L else m("npii").asInstanceOf[Long]
     val n = report.record_count
@@ -1098,18 +1081,16 @@ object GuardianStream {
         report.checks.get("text_len").map(c =>
           "text_len_mean" -> c.actual_mean.toString),
       timestamp = Some(batchId.toDouble))
-    phase("publish") { IceLite.publish(cfg.sinkDir, batchId, lineage, parts) }
-    phase("quality") {
-      publishQuality(batch.sparkSession, cfg, batchId,
-        observed = qualityMetric.map(_ =>
-          m("qwin").asInstanceOf[scala.collection.Map[Long, scala.collection.Seq[Long]]]),
-        observedVocab = vocabMetric.map(_ =>
-          m("vocab").asInstanceOf[scala.collection.Map[String, Long]]),
-        observedDiv = divMetric.map(_ =>
-          m("gdiv").asInstanceOf[scala.collection.Seq[Long]]),
-        observedCms = cmsMetric.map(_ =>
-          m("gcms").asInstanceOf[scala.collection.Seq[Long]]))
-    }
+    IceLite.publish(cfg.sinkDir, batchId, lineage, parts)
+    publishQuality(batch.sparkSession, cfg, batchId,
+      observed = qualityMetric.map(_ =>
+        m("qwin").asInstanceOf[scala.collection.Map[Long, scala.collection.Seq[Long]]]),
+      observedVocab = vocabMetric.map(_ =>
+        m("vocab").asInstanceOf[scala.collection.Map[String, Long]]),
+      observedDiv = divMetric.map(_ =>
+        m("gdiv").asInstanceOf[scala.collection.Seq[Long]]),
+      observedCms = cmsMetric.map(_ =>
+        m("gcms").asInstanceOf[scala.collection.Seq[Long]]))
     publishSessions(batch.sparkSession, cfg, batchId)
     // Periodic partial compaction (idempotent, crash-safe: atomic
     // publish-if-absent of deterministic merged content; old state stays

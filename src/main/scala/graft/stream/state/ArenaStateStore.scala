@@ -70,9 +70,8 @@ class ArenaStateStoreProvider extends StateStoreProvider {
     * get/put — narrower than the built-in providers. The operators this
     * engine plans (dedup, join, agg) all consume a lookup before the next
     * one; an operator that must HOLD a looked-up value across lookups
-    * sets `spark.hadoop.graft.arena.copyOnGet=true` (or env
-    * SPARK_GRAFT_ARENA_COPY_ON_GET=1) to get stable copies instead of
-    * silently reading corrupted state.
+    * sets `spark.hadoop.graft.arena.copyOnGet=true` to get stable
+    * copies instead of silently reading corrupted state.
     */
   private var copyOnGet = false
 
@@ -109,8 +108,7 @@ class ArenaStateStoreProvider extends StateStoreProvider {
     this.hadoopConf = hadoopConf
     this.baseDir = stateStoreId.storeCheckpointLocation()
     this.fs = baseDir.getFileSystem(hadoopConf)
-    this.copyOnGet = hadoopConf.getBoolean("graft.arena.copyOnGet", false) ||
-      sys.env.get("SPARK_GRAFT_ARENA_COPY_ON_GET").contains("1")
+    this.copyOnGet = hadoopConf.getBoolean("graft.arena.copyOnGet", false)
     fs.mkdirs(baseDir)
   }
 

@@ -413,6 +413,18 @@ class TrainingDataOpsSpec extends SparkSpec {
     assert(out.count(_._2 == "mega") == 22 && out.count(_._2 == "tiny") == 2)
   }
 
+  test("min-k aggregate: an int id column equals the same column cast to long") {
+    import graft.expressions.MinKLongsAgg.minK
+    val docs = (0 until 40).map(i => ((i * 7) % 41, if (i % 3 == 0) "a" else "b"))
+      .toDF("doc_id", "source")
+    def ids(c: org.apache.spark.sql.Column) =
+      docs.groupBy("source").agg(minK(c, 4).as("ids")).collect()
+        .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+    val asInt = ids(col("doc_id"))
+    assert(asInt.nonEmpty && asInt == ids(col("doc_id").cast("long")),
+      s"int input must be widened to long: $asInt")
+  }
+
   test("min-k heap buffer: k=1, duplicates, rejection, merge and ser/deser round-trip") {
     import graft.expressions.MinKHeap
     // k=1 keeps the single minimum
@@ -439,13 +451,16 @@ class TrainingDataOpsSpec extends SparkSpec {
     // hot source with 200 cap-eligible docs (cap 5), a dup-dropped doc,
     // NULL-lang rows planted BELOW and ABOVE the cap threshold (the
     // three-valued edge: retain NULL + 'retained' below, false +
-    // 'source_cap' above), and a cold source.
+    // 'source_cap' above), a cold source, and a NULL-source group with
+    // more eligible docs than the cap (the window's PARTITION BY caps
+    // NULL sources as one group, so the threshold join must too).
     val rows = (0 until 200).map(i =>
       (100L + i, s"tok$i alpha beta gamma", "en", "hot")) ++ Seq(
       (99L, "omega psi chi phi", null.asInstanceOf[String], "hot"),
       (500L, "upsilon rho sigma tau", null.asInstanceOf[String], "hot"),
       (501L, "uno dos tres cuatro", "en", "cold"),
-      (502L, "tiny", "en", "cold"))
+      (502L, "tiny", "en", "cold")) ++ (0 until 8).map(i =>
+      (600L + i, s"nul$i alpha beta gamma", "en", null.asInstanceOf[String]))
     val docs = rows.toDF("doc_id", "text", "lang", "source")
     val dupTbl = Seq((100L, false), (501L, true)).toDF("doc_id", "keep")
     docs.createOrReplaceTempView("cr_docs")
@@ -479,6 +494,9 @@ class TrainingDataOpsSpec extends SparkSpec {
     assert(!byId(500L).isNullAt(6) && !byId(500L).getBoolean(6) &&
       byId(500L).getString(7) == "source_cap",
       "NULL-lang row past the threshold is false + 'source_cap'")
+    assert((600L until 608L).map(byId(_).getString(7)) ==
+      Seq.fill(5)("retained") ++ Seq.fill(3)("source_cap"),
+      "NULL-source rows are capped as one group")
   }
 
   test("corpus retain: each stage drops its planted doc with the right reason") {
